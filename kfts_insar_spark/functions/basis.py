@@ -384,18 +384,6 @@ def basis_sql(
     return out
 
 
-def eval_model_column(
-    model: Model, t: Column, coeffs: Column, t_grid: np.ndarray | None = None
-) -> Column:
-    """f(t) = coeffs · basis(t) as a Column over array<double> coeffs —
-    the Spark recast of ``draw_model`` (kf/timefunction.py:274-297)."""
-    terms = basis_columns(model, t, t_grid)
-    expr = F.lit(0.0)
-    for i, term in enumerate(terms):
-        expr = expr + F.element_at(coeffs, i + 1) * term
-    return expr
-
-
 def shift_t0_coeffs(model: Model, m: np.ndarray, t0: float) -> np.ndarray:
     """Re-express model coefficients under a time-origin shift t0 =
     t0_new − t0_old (reference ``shift_t0``, kf/timefunction.py:320-401).

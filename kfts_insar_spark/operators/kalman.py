@@ -142,6 +142,20 @@ def kalman_direct_batch(
     m (B, n) final state, P (B, n, n) final covariance, idx0, k_done.
     """
     values = np.asarray(values, dtype=np.float64)
+    if values.shape[0] == 1:
+        # numpy's einsum/matmul take another SIMD path for a size-1 batch
+        # axis, which changes the last ulps (up to 1.5e-11 in phase): run
+        # the doc as a two-row batch so a doc's bits do not depend on how
+        # many docs share its batch (resumed and rebuild runs emit B=1)
+        def two(a):
+            return None if a is None else np.repeat(np.asarray(a), 2, axis=0)
+
+        if init is not None:
+            init = {**init, "X": two(init["X"]), "P": two(init["P"])}
+        res = kalman_direct_batch(two(values), t, cfg, init, two(p0_diag))
+        for k in ("phase", "std", "innov", "gap", "m", "P", "fit_flag", "fit_max"):
+            res[k] = res[k][:1]
+        return res
     B, M = values.shape
     L, ts = cfg.L, cfg.t_sep
     R = cfg.sig_i**2

@@ -105,8 +105,9 @@ class TierPipeline:
         self.d1 = SnapshotTable(os.path.join(base_dir, "tier_1d"))
         self.comp = SnapshotTable(os.path.join(base_dir, "tier_compressed"))
         # KF-stage input: (source, doc-hash shard) sub-series — 5 sources
-        # alone cap the gap-fill at 5 tasks; 5 × kf_shards series keep the
-        # stage's parallelism ≥ cluster cores (the round-1 scale-killer)
+        # alone cap the kernel at 5 docs; 5 × kf_shards sub-series set the
+        # kernel's batch width, while AQE sizes the stage's task count from
+        # its shuffle bytes
         self.series = SnapshotTable(os.path.join(base_dir, "tier_series"))
         self.gap = SnapshotTable(os.path.join(base_dir, "tier_gapfilled"))
         self.kf_state = SnapshotTable(os.path.join(base_dir, "kf_state"))
@@ -513,11 +514,12 @@ class TierPipeline:
     def _run_gapfill(self, spark: SparkSession, wm: int) -> dict:
         """Gap-fill the (source, shard) sub-series with the Kalman kernel.
 
-        Scale shape (the round-1 review's top perf fix): per-(source, shard)
-        doc-wide rows → ONE mapInPandas kernel execution emitting output AND
-        resumable state together (persisted, so the two tier writes share
-        it), grid bounds from a single min/max action, parallelism
-        5 × kf_shards instead of 5.
+        Scale shape: per-(source, shard) doc-wide rows → ONE mapInPandas
+        kernel execution emitting output AND resumable state together
+        (persisted, so the two tier writes share it), grid bounds from the
+        manifest or committed state. 5 × kf_shards sub-series set the
+        kernel's batch width; AQE sets the stage's task count from its
+        shuffle bytes (one task for an hourly increment).
         """
         import numpy as np
 

@@ -1,56 +1,13 @@
-"""Canonical schemas.
+"""Canonical schemas of the Kalman output, its resumable state and the
+compressed tier.
 
-The authoritative input shape (BASELINE.json ``input_hint``) is the pre-tokenized
-training-sequence table::
-
-    (doc_id: string, tokens: array<int32>, n_tok: int32, source: string)
-
-plus an ingest-time axis for the rollup tiers. The per-doc series / pairs /
-state shapes re-express the reference's dense HDF5 cube relationally
-(SURVEY.md §1.4; reference cube: /root/reference/kf/readinput.py:77-106).
+The KF output / state shapes re-express the reference's dense HDF5 cube
+relationally (SURVEY.md §1.4; reference cube: kf/readinput.py:77-106).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------- sequences
-SEQUENCES = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("n_tok", T.IntegerType(), False),
-        T.StructField("source", T.StringType(), False),
-        # acquisition-time axis for the retention tiers (epoch seconds + ts)
-        T.StructField("ingest_es", T.LongType(), False),
-        T.StructField("ingest_ts", T.TimestampType(), False),
-    ]
-)
-
-# ------------------------------------------------------- per-doc observation
-# Long-format series: one row per (doc, step) — the relational form of one
-# pixel's time series in the reference cube (kf/readinput.py:77-106).
-SERIES = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("step", T.IntegerType(), False),
-        T.StructField("t", T.DoubleType(), False),  # decimal time (years)
-        T.StructField("value", T.DoubleType(), True),  # NULL = gap
-    ]
-)
-
-# ------------------------------------------------------------ incidence pairs
-# Edge list of the measurement graph — the reference's Jmat/links ±1 matrix
-# reduced to (t_minus, t_plus) index pairs (kf/readinput.py:455-472).
-PAIRS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("obs_id", T.IntegerType(), False),
-        T.StructField("t_minus", T.IntegerType(), False),
-        T.StructField("t_plus", T.IntegerType(), False),
-        T.StructField("obs_value", T.DoubleType(), True),
-    ]
-)
 
 # ----------------------------------------------------------------- KF output
 # One row per (doc, step): smoothed phase + std + innovation — the relational
@@ -81,20 +38,6 @@ KF_STATE = T.StructType(
 )
 
 # ------------------------------------------------------------- rollup tiers
-def tier_schema(with_doc: bool = False) -> T.StructType:
-    fields = [T.StructField("source", T.StringType(), False)]
-    if with_doc:
-        fields.insert(0, T.StructField("doc_id", T.StringType(), False))
-    fields += [
-        T.StructField("bucket_es", T.LongType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("sum_tok", T.LongType(), False),
-        T.StructField("min_tok", T.IntegerType(), False),
-        T.StructField("max_tok", T.IntegerType(), False),
-    ]
-    return T.StructType(fields)
-
-
 # Gorilla-compressed tier buckets: one row per (source, coarse bucket)
 COMPRESSED_TIER = T.StructType(
     [

@@ -167,6 +167,30 @@ def test_resume_equals_oneshot_local():
     np.testing.assert_array_equal(r2["P"], one["P"])
 
 
+@pytest.mark.parametrize("resumed", [False, True])
+def test_batch_shape_is_bit_invariant(resumed):
+    """A doc's output must not depend on the batch it shares: B=1 (resumed
+    and rebuild runs) and odd B equal the doc's row of a B=9 batch bit for
+    bit, cold and resumed from committed state."""
+    _, y, _, _ = make_series(9)
+    init = None
+    if resumed:
+        r1 = kalman_direct_batch(y[:, :60], T[:60], CFG)
+        init = {"X": r1["m"], "P": r1["P"], "idx0": r1["idx0"], "k_done": 60}
+
+    def run(lo, hi):
+        sub = None
+        if init is not None:
+            sub = {**init, "X": init["X"][lo:hi], "P": init["P"][lo:hi]}
+        return kalman_direct_batch(y[lo:hi], T, CFG, init=sub)
+
+    full = run(0, 9)
+    for lo, hi in [(i, i + 1) for i in range(9)] + [(0, 3), (3, 8)]:
+        part = run(lo, hi)
+        for k in ("phase", "std", "innov", "gap", "m", "P", "fit_max"):
+            np.testing.assert_array_equal(part[k], full[k][lo:hi], err_msg=k)
+
+
 def test_spark_resume_equals_oneshot(spark):
     from kfts_insar_spark.operators.kalman import kalman_resume
 

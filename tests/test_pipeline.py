@@ -192,6 +192,39 @@ def test_gapfill_parallelism_shape(spark, seq, tmp_path):
     assert g.select("source", "shard").distinct().count() == n_series
 
 
+def test_resumed_run_task_count(spark, seq, tmp_path):
+    """AQE must coalesce the shuffles under the pipeline's persisted frames
+    (Kalman kernel, stitch, raw days): a one-hour resumed run is a few KB
+    per stage, yet with a cached plan's partitioning left fixed it ran 116
+    tasks on this 8-partition session; coalesced it runs 53."""
+    import time
+
+    hi = seq.agg(F.max("ingest_es")).first()[0]
+    pipe = TierPipeline(str(tmp_path))
+    pipe.run(spark, seq.filter(F.col("ingest_es") <= hi - 3600))
+
+    # job ids, not a job group: the pipeline's pool threads do not inherit
+    # the caller's group
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert pipe.run(spark, seq)["status"] == "ok"
+    jobs = sorted(set(tracker.getJobIdsForGroup()) - before)
+    assert jobs
+    # the status store trails the listener bus: a job reads SUCCEEDED only
+    # after all its task and stage events are counted
+    deadline = time.monotonic() + 30
+    while any(tracker.getJobInfo(j).status != "SUCCEEDED" for j in jobs):
+        assert time.monotonic() < deadline, "jobs did not finish"
+        time.sleep(0.1)
+    tasks = sum(
+        si.numCompletedTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if (si := tracker.getStageInfo(s)) is not None
+    )
+    assert 0 < tasks <= 64, (len(jobs), tasks)
+
+
 def test_compact_binpacks_small_files(spark, seq, tmp_path):
     """SnapshotTable.compact (Iceberg rewrite_data_files analog): three
     incremental appends leave >=3 files per touched day; compaction
